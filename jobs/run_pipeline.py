@@ -10,9 +10,8 @@ Cluster usage (the north rule's launch shape):
         --alias-dict /data/alias_dict.parquet \
         --output /data/kg \
         --run-id prod-2026-08-16 \
-        --stage all            # or extract|link|canonicalize|materialize
-        [--resume]             # EP-3: skip checkpointed-done partitions
-        [--n-buckets 4096] [--salt 16] [--parallelism 2048]
+        --stage all            # or a prefix: extract[,link[,canonicalize]]
+        [--n-buckets 4096] [--parallelism 2048]
 
 Sandbox smoke:
     python jobs/run_pipeline.py --input .fixtures/golden_docs.parquet \
@@ -37,11 +36,14 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from openie_spark.catalog import ParquetCatalog
-from openie_spark.plans.pipeline import PipelineConfig, run_pipeline
+from openie_spark.plans.pipeline import (
+    STAGES,
+    PipelineConfig,
+    run_pipeline,
+    validate_stages,
+)
 from openie_spark.session import get_spark
 from openie_spark.sources.tables import load_alias_dict, load_docs
-
-STAGES = ("extract", "link", "canonicalize", "materialize")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -50,19 +52,14 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--alias-dict", required=True, help="alias dict parquet path")
     ap.add_argument("--output", required=True, help="output catalog root")
     ap.add_argument("--run-id", required=True)
-    ap.add_argument("--stage", default="all", help="all or comma list of stages")
-    ap.add_argument("--resume", action="store_true", help="(resume is the default behavior: done partitions are skipped; flag kept for cluster-script parity)")
+    ap.add_argument("--stage", default="all",
+                    help=f"all, or a comma list forming a prefix of {STAGES}")
     ap.add_argument("--n-buckets", type=int, default=64)
-    ap.add_argument("--salt", type=int, default=8)
     ap.add_argument("--parallelism", type=int, default=None)
     ap.add_argument("--no-counts", action="store_true",
                     help="skip informational count() actions (fewer jobs)")
     ap.add_argument("--no-invariant", action="store_true",
                     help="skip the in-run span-invariant scan (pytest gates it)")
-    ap.add_argument("--no-broadcast-canon", action="store_true",
-                    help="use the salted shuffle joins instead of "
-                         "broadcasting the mention→canonical map "
-                         "(for 1e9+ distinct-mention vocabularies)")
     ap.add_argument("--lineage-cut", default=None,
                     choices=("local", "reliable", "none"),
                     help="stage-boundary lineage policy "
@@ -80,10 +77,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
-    stages = STAGES if args.stage == "all" else tuple(args.stage.split(","))
-    for s in stages:
-        if s not in STAGES:
-            ap.error(f"unknown stage {s!r}; valid: {STAGES}")
+    try:
+        stages = validate_stages(
+            STAGES if args.stage == "all" else args.stage.split(",")
+        )
+    except ValueError as e:
+        ap.error(str(e))
 
     spark = get_spark(app=f"kg-{args.run_id}", master=args.master)
     try:
@@ -99,12 +98,10 @@ def main(argv: list[str] | None = None) -> int:
         cfg = PipelineConfig(
             run_id=args.run_id,
             n_buckets=args.n_buckets,
-            salt=args.salt,
             repartition=args.parallelism,
             stages=stages,
             collect_counts=not args.no_counts,
             check_invariant=not args.no_invariant,
-            broadcast_canon=not args.no_broadcast_canon,
             cluster_before_extract={"auto": None, "on": True, "off": False}[
                 args.cluster_extract
             ],

@@ -9,7 +9,7 @@
   - one abbreviation (first letters of words) for multi-word names.
 
 Mentions in the golden corpus draw entities zipf(alpha=1.2) so the top
-entity is a genuinely hot join key (exercises OP-52 salted join / AQE skew).
+entity is a genuinely hot join key (exercises the materialize joins / AQE skew).
 """
 
 from __future__ import annotations

@@ -21,8 +21,8 @@ distinct-mentions projection upstream collapses the join input to unique
 mention_norm values (bounded by vocabulary, not corpus size); the alias dict
 is broadcast once.  Hot mention_norm values are irrelevant here because the
 join runs on DISTINCT mentions; the hot-key problem lives in the
-triples→links join back, handled by AQE skew split + optional salting
-(operators/skew.py).
+triples→canonical join back, which the pipeline's materialize stage
+broadcasts (plans/pipeline.py).
 """
 
 from __future__ import annotations

@@ -1,94 +1,16 @@
-"""Skew machinery (OP-52, OP-71): hot-key detection + explicit salted join.
+"""Skew handling: a salted repartition for the extract stage's input.
 
-AQE's skew-join splitting (on in session.py) already splits oversized
-partitions of a sort-merge join at runtime; this module adds the two things
-AQE does not give us:
-  - OP-71 hot-key detection as data (a tiny top-k aggregate → driver list),
-    so jobs can log/persist which entities are hot, and
-  - OP-52 an explicit salt for the hot keys only: the big probe side gets a
-    deterministic per-row salt in [0, S), the small build side is replicated
-    S ways for hot keys and 1 way otherwise — bounded replication, exact
-    join semantics, no RNG (salt = pmod(xxhash64(salt_src_cols), S), never
-    rand(), so reruns are byte-identical).
-
-At the 10^12-doc target the triples→links join key (mention_norm) is
-zipf-distributed — the golden fixtures build an entity that appears in ~6-8%
-of triples precisely so these paths are exercised, not theater.
+Join skew on hot entities is handled by plan shape, not by salting: the
+pipeline's materialize joins and the random-walk step join broadcast their
+small side, so the big side is never shuffled and no partition gathers a hot
+key's rows.  Any remaining sort-merge join is split at runtime by AQE's
+skew-join handling (on in session.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from openie_spark.functions.lineage import cut_lineage
-
-
-def hot_keys(df: DataFrame, key: str, min_share: float = 0.01, top: int = 100) -> list:
-    """OP-71: keys carrying more than `min_share` of rows (top-k capped).
-
-    ONE scan of ``df``: the per-key counts are materialized (lineage cut),
-    then the total is summed from the counts themselves — which are
-    vocabulary-bounded, orders of magnitude smaller than the input — so the
-    input is never scanned a second time just to learn the denominator."""
-    counts = cut_lineage(
-        df.groupBy(key).agg(F.count("*").alias("n")), eager=True
-    )
-    total = counts.agg(F.sum("n").alias("t")).collect()[0]["t"] or 0
-    if total == 0:
-        return []
-    rows = (
-        counts.where(F.col("n") >= max(1, int(total * min_share)))
-        .orderBy(F.desc("n"), F.asc(key))
-        .limit(top)
-        .collect()
-    )
-    return [r[key] for r in rows]
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    hot: list,
-    n_salt: int = 16,
-    salt_src: list[str] | None = None,
-    how: str = "inner",
-    broadcast_small: bool = False,
-) -> DataFrame:
-    """OP-52: equi-join big ⋈ small on `key`, salting only the hot keys.
-
-    big rows get salt = pmod(xxhash64(*salt_src), n_salt) when key is hot
-    (0 otherwise); small rows for hot keys are replicated n_salt ways via
-    explode(sequence(...)) — a bounded, deterministic fan-out.
-
-    ``broadcast_small=True`` short-circuits the whole machinery: a
-    broadcast hash join never shuffles the big side, so there is no skewed
-    partition to salt — the hot list is ignored.  This is the right plan
-    whenever the small side genuinely fits the broadcast budget; the
-    salted shuffle path exists for when it does not.
-    """
-    if broadcast_small:
-        return big.join(F.broadcast(small), key, how)
-    if not hot:
-        return big.join(small, key, how)
-    salt_src = salt_src or [key]
-    hot_arr = F.array(*[F.lit(h) for h in hot])
-    b = big.withColumn(
-        "_salt",
-        F.when(
-            F.array_contains(hot_arr, F.col(key)),
-            F.pmod(F.xxhash64(*salt_src), F.lit(n_salt)).cast("int"),
-        ).otherwise(F.lit(0)),
-    )
-    s = small.withColumn(
-        "_salts",
-        F.when(
-            F.array_contains(hot_arr, F.col(key)),
-            F.sequence(F.lit(0), F.lit(n_salt - 1)),
-        ).otherwise(F.array(F.lit(0))),
-    ).withColumn("_salt", F.explode("_salts")).drop("_salts")
-    return b.join(s, [key, "_salt"], how).drop("_salt")
 
 
 def salted_repartition(df: DataFrame, n: int, *cols: str) -> DataFrame:

@@ -3,9 +3,9 @@
     documents ─ resume-filter ─ salted-repartition ─ extract(UDF) ─ triples
       triples ─ mentions ─ exact ∪ LSH ∪ mint links
         links ─ sameAs edges ─ large/small-star CC ─ canonical ids
-          triples ⋈ links (AQE skew + optional salt) ─ edges table
-          nodes  ⋈ canonical                          ─ vertices table
-      + span-sequence invariant check, checkpoint rows, metrics
+          triples ⋈ broadcast(mention→canonical) ─ edges table
+          nodes  ⋈ canonical                     ─ vertices table
+      + span-sequence invariant check, checkpoint rows
 
 Graph model: every distinct mention_norm is a node (id = xxhash64(norm));
 every linked dictionary entity is a node (id = entity_id).  sameAs edges
@@ -17,7 +17,7 @@ one canonical_id = min(component).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,9 +28,26 @@ from openie_spark.operators.extract import extract_stage, mentions_from_triples
 from openie_spark.operators.invariant import arrow_roundtrip, check_span_invariant
 from openie_spark.operators.linking import link_mentions
 from openie_spark.functions.lineage import cut_lineage
-from openie_spark.operators.skew import hot_keys, salted_join, salted_repartition
+from openie_spark.operators.skew import salted_repartition
 from openie_spark.plans import checkpoint as ckpt
 from openie_spark.schemas import EDGES_SCHEMA, VERTICES_SCHEMA, assert_schema
+
+
+# Each stage reads the table its predecessor wrote, so a run selects a
+# non-empty prefix of this order (extract always runs; its resume gate makes
+# a re-run over unchanged input cheap).
+STAGES = ("extract", "link", "canonicalize", "materialize")
+
+
+def validate_stages(stages) -> tuple:
+    """``stages`` as a tuple; ValueError unless it is a non-empty prefix
+    of :data:`STAGES`."""
+    stages = tuple(stages)
+    if not stages or stages != STAGES[: len(stages)]:
+        raise ValueError(
+            f"stages must be a non-empty prefix of {STAGES}, got {stages!r}"
+        )
+    return stages
 
 
 @dataclass
@@ -38,15 +55,6 @@ class PipelineConfig:
     run_id: str = "run0"
     n_buckets: int = 64
     repartition: int | None = None  # default: spark.sql.shuffle.partitions
-    salt: int = 8
-    hot_share: float = 0.02
-    use_manual_salt: bool = True
-    # broadcast the vocab-bounded mention→canonical map into the two
-    # triples joins: a broadcast hash join never shuffles the (huge)
-    # triples table, so materialize drops its two biggest shuffles.  Turn
-    # off when the distinct-mention vocabulary outgrows the broadcast
-    # budget (1e9+ mentions) — the salted shuffle path then takes over.
-    broadcast_canon: bool = True
     # Extract-stage physical plan.  Both variants are salted repartitions
     # on doc_id (the north rule's driver); they differ in what the salt IS:
     #   False: full-width salt (xxhash64) → perfectly uniform extraction,
@@ -81,8 +89,7 @@ class PipelineConfig:
     # docs every run); the EXHAUSTIVE per-row gate lives in pytest L3a
     # and the corruption-detection tests target the checker directly.
     invariant_sample_pm: int = 50
-    stages: tuple = ("extract", "link", "canonicalize", "materialize")
-    metrics: dict = field(default_factory=dict)
+    stages: tuple = STAGES
 
 
 def run_pipeline(
@@ -93,6 +100,7 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
 ) -> dict:
     cfg = cfg or PipelineConfig()
+    validate_stages(cfg.stages)
     out: dict = {"run_id": cfg.run_id}
     nparts = cfg.repartition or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -329,13 +337,10 @@ def run_pipeline(
         and cat.exists("edges")
     )
     if mat_done:
-        with ckpt.StageTimer() as t_mat:
-            hot = []
         if cfg.collect_counts:
             out["n_vertices"] = cat.load_table("vertices").count()
             out["n_edges"] = cat.load_table("edges").count()
-        out["n_hot_keys"] = 0
-        out["materialize_wall_ms"] = t_mat.wall_ms
+        out["materialize_wall_ms"] = 0
         out["materialize_skipped"] = True
         return out
     with ckpt.StageTimer() as t_mat:
@@ -387,49 +392,22 @@ def run_pipeline(
             "mention_norm",
             F.coalesce("rep", F.col("node_id")).alias("canonical_id"),
         )
-        # one explode-projection scan of triples (not a 2x union of
-        # projections): subj_norm and arg_norm rows come out of the same
-        # pass, and hot_keys itself derives its total from the grouped
-        # counts — triples is read exactly once for hot-key detection.
-        # Skipped entirely when the canonical map is broadcast: a
-        # broadcast hash join never shuffles the big side, so the hot
-        # list would be dead diagnostics bought with a full triples scan.
-        hot = (
-            hot_keys(
-                triples.select(
-                    F.explode(F.array("subj_norm", "arg_norm")).alias("k")
-                ),
-                "k",
-                cfg.hot_share,
+        # The canonical map is vocabulary-bounded, so both joins broadcast
+        # it: the triples table is never shuffled, and a hot entity costs
+        # nothing extra because no partition gathers its rows.
+        subj_canon = norm_to_canon.toDF("subj_norm", "subj_canonical")
+        obj_canon = norm_to_canon.toDF("arg_norm", "obj_canonical")
+        edges = (
+            triples.join(F.broadcast(subj_canon), "subj_norm")
+            .join(F.broadcast(obj_canon), "arg_norm")
+            .select(
+                "subj_canonical",
+                F.col("rel").alias("pred"),
+                "obj_canonical",
+                "doc_id",
+                "sent_idx",
+                "conf",
             )
-            if cfg.use_manual_salt and not cfg.broadcast_canon
-            else []
-        )
-        t1 = salted_join(
-            triples.withColumnRenamed("subj_norm", "mention_norm"),
-            norm_to_canon.withColumnRenamed("canonical_id", "subj_canonical"),
-            "mention_norm",
-            hot,
-            cfg.salt,
-            salt_src=["doc_id", "sent_idx", "arg"],
-            broadcast_small=cfg.broadcast_canon,
-        ).drop("mention_norm")
-        t2 = salted_join(
-            t1.withColumnRenamed("arg_norm", "mention_norm"),
-            norm_to_canon.withColumnRenamed("canonical_id", "obj_canonical"),
-            "mention_norm",
-            hot,
-            cfg.salt,
-            salt_src=["doc_id", "sent_idx", "subj"],
-            broadcast_small=cfg.broadcast_canon,
-        ).drop("mention_norm")
-        edges = t2.select(
-            "subj_canonical",
-            F.col("rel").alias("pred"),
-            "obj_canonical",
-            "doc_id",
-            "sent_idx",
-            "conf",
         )
         assert_schema(edges, EDGES_SCHEMA, "edges")
         cat.write_table(vertices, "vertices")
@@ -446,7 +424,6 @@ def run_pipeline(
         out.get("n_edges", -1),
         t_mat.wall_ms,
     )
-    out["n_hot_keys"] = len(hot)
     out["materialize_wall_ms"] = t_mat.wall_ms
     out["materialize_skipped"] = False
     return out

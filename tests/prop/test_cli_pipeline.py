@@ -20,6 +20,7 @@ from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from openie_spark.functions.hashing import xxh64
 
@@ -74,3 +75,29 @@ def test_cli_delta_append_recomputes_only_delta(
     # incremental end state == from-scratch: the golden corpus's pinned
     # RULESET v3 triple count (tests/spec/test_ruleset_v3.py)
     assert r2["n_triples"] == 2687
+
+
+@pytest.mark.parametrize("stage", ["materialize", "link,materialize"])
+def test_cli_rejects_stage_list_that_is_not_a_prefix(stage, tmp_path):
+    """A stage list that skips a stage is a usage error (exit 2) raised
+    before any Spark work, not a silent extract-only run."""
+    out = tmp_path / "kg"
+    proc = subprocess.run(
+        [
+            sys.executable,
+            str(REPO / "jobs" / "run_pipeline.py"),
+            "--input", str(tmp_path / "docs.parquet"),
+            "--alias-dict", str(tmp_path / "alias.parquet"),
+            "--output", str(out),
+            "--run-id", "bad-stage",
+            "--stage", stage,
+            "--master", "local[1]",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=str(REPO),
+    )
+    assert proc.returncode == 2, proc.stderr[-3000:]
+    assert "prefix" in proc.stderr
+    assert not out.exists()

@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from openie_spark.functions.lineage import CKPT_DIR_KEY, CONF_KEY, cut_lineage
-from openie_spark.operators.skew import hot_keys
 
 
 def test_reliable_mode_requires_checkpoint_dir(spark):
@@ -37,13 +36,6 @@ def test_cut_lineage_modes_preserve_results(spark, mode, tmp_path):
         cut = cut_lineage(df, eager=True)
         assert cut.count() == 100
         assert cut.groupBy("k").count().count() == 7
-        # hot_keys goes through the seam internally
-        skewed = spark.range(100).select(
-            F.when(F.col("id") < 60, F.lit("hot")).otherwise(
-                F.concat(F.lit("k"), F.col("id"))
-            ).alias("k")
-        )
-        assert hot_keys(skewed, "k", 0.1) == ["hot"]
     finally:
         spark.conf.unset(CONF_KEY)
         spark.conf.unset(CKPT_DIR_KEY)
